@@ -125,17 +125,17 @@ object Bpe {
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // global word table derives from sw — no second corpus pass.
-    // Per-round localCheckpoints instead of a persist chain (the
-    // learnMerges r14 flat-plan rationale); unlike learnMerges the
-    // output reads only the FINAL table, so superseded rounds free
-    // eagerly.
-    var words = sw.groupBy(col("w")).agg(sum(col("c")).as("cnt"))
+    // Checkpointed rounds instead of a persist chain (the learnMerges
+    // r14 flat-plan rationale); unlike learnMerges the output reads only
+    // the FINAL table, so superseded rounds free eagerly.
+    val init = sw.groupBy(col("w")).agg(sum(col("c")).as("cnt"))
       .select(col("w").as("orig"),
         concat(lit(" "),
           concat_ws(" ", split(col("w"), "")), lit(" </w> ")).as("word"),
         col("cnt"))
       .localCheckpoint()
-    for (_ <- 1 to rounds) {
+    val (words, _) = Checkpoints.rounds(init, rounds, ownsInit = true) {
+        (words, _) =>
       val syms = split(trim(col("word")), " ")
       val pairs = words.select(col("cnt"),
           explode(arrays_zip(
@@ -147,13 +147,10 @@ object Bpe {
         .agg(sum(col("cnt")).as("pair_count"))
         .orderBy(col("pair_count").desc, col("l"), col("r"))
         .limit(1)
-      val next = words.crossJoin(broadcast(winner.select(col("l"), col("r"))))
+      words.crossJoin(broadcast(winner.select(col("l"), col("r"))))
         .select(col("orig"), expr(
           "replace(word, ' ' || l || ' ' || r || ' ', ' ' || l || r || ' ')")
           .as("word"), col("cnt"))
-        .localCheckpoint()
-      Checkpoints.freeCheckpoint(words)
-      words = next
     }
     val enc = words.select(col("orig"),
       size(split(trim(col("word")), " ")).cast("long").as("sym"))

@@ -1,20 +1,80 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.col
 
-/** Shared home for the localCheckpoint release protocol (ADVICE r11:
-  * Graphs, Similarity, Dedup and SuffixDedup each carried a private
-  * verbatim copy — one owner removes the divergence risk if the
-  * unpersist protocol ever changes with a Spark upgrade).
+/** The round protocol of graft's iterative operators (label propagation,
+  * k-core peeling, random walks, HLL centrality, NN-Descent builds and
+  * beam walks, pointer-doubling CC, BPE encoding, unigram-LM EM), owned
+  * in one place by [[rounds]]:
   *
-  * Iterative operators (prefix-doubling ranks, NN-Descent rounds,
-  * HyperBall, incremental dedup) `localCheckpoint` each round to cut
-  * lineage, then free the PREDECESSOR round's blocks once the
-  * successor is materialized. Plain `Dataset.unpersist` only talks to
-  * the cache manager, not to the checkpointed RDD, so the release has
-  * to reach through the analyzed plan to the `LogicalRDD` and
-  * unpersist that RDD directly. */
+  *  - ROUND: each round is a lazy frame built from its predecessor and
+  *    eagerly `localCheckpoint`ed — the checkpoint cuts lineage, so a
+  *    round that reads its predecessor several times keeps a
+  *    constant-sized plan instead of one that multiplies every round.
+  *  - FREEING: once the successor is materialized nothing lazy reads the
+  *    predecessor, so its blocks are released. Plain `Dataset.unpersist`
+  *    only talks to the cache manager, not to the checkpointed RDD, so
+  *    [[freeCheckpoint]] reaches through the analyzed plan to the
+  *    `LogicalRDD` and unpersists that RDD directly.
+  *  - OWNERSHIP: [[rounds]] frees only the checkpoints it made, plus
+  *    `init` when the caller hands it over (`ownsInit`). A caller-kept
+  *    `init` is never freed — it may be a projection over a table the
+  *    caller still reads, and freeing a projection frees what it reads.
+  *    The last round is returned to the caller, who owns it from then.
+  *  - STOP: an optional aggregate `Column`, attached to the round through
+  *    an unnamed `Observation` before the checkpoint, so its value
+  *    arrives with the checkpoint's own job — a convergence test costs
+  *    no extra Spark action. A Boolean metric stops the rounds when it
+  *    reads true; any other metric stops them when it repeats the
+  *    previous round's value (the fixpoint of a table that only
+  *    shrinks). Metrics are delivered on empty rounds too, but `sum`
+  *    over no rows is null, and a null metric never stops — write stop
+  *    conditions with `count`/`count_if` or `coalesce`.
+  *
+  * Loops whose output reads every round (Bpe.learnMerges, Unigram.learn,
+  * Graphs.hyperBall) have nothing to free and stay hand-written, as do
+  * the star-CC rounds, whose lazy checkpoint is materialized by their
+  * own fused count + fingerprint pass. */
 private[graft] object Checkpoints {
+
+  /** Runs at most `n` rounds of `step` from `init` under the protocol
+    * above. Every round keeps `init`'s columns: columns that only `stop`
+    * reads are dropped before the checkpoint. `step` gets the previous
+    * round and the 1-based number of the round it builds. Returns the
+    * last round (`init` itself when `n` is 0) and whether `stop`
+    * fired. */
+  def rounds(init: DataFrame, n: Int, ownsInit: Boolean,
+             stop: Option[Column] = None)
+            (step: (DataFrame, Int) => DataFrame): (DataFrame, Boolean) = {
+    val keep = init.columns.toSeq.map(c => col(s"`$c`"))
+    var cur = init
+    var owned = ownsInit
+    var last: Option[Any] = None
+    var stopped = false
+    var r = 0
+    while (r < n && !stopped) {
+      r += 1
+      val round = step(cur, r)
+      val obs = stop.map(_ => Observation())
+      val next = obs.fold(round)(o => round.observe(o, stop.get.as("stop")))
+        .select(keep: _*)
+        .localCheckpoint()
+      if (owned) freeCheckpoint(cur)
+      obs.foreach { o =>
+        val v = o.get("stop")
+        stopped = v match {
+          case null => false
+          case b: Boolean => b
+          case _ => last.contains(v)
+        }
+        last = Some(v)
+      }
+      cur = next
+      owned = true
+    }
+    (cur, stopped)
+  }
 
   /** Frees the storage blocks behind a `localCheckpoint`ed frame.
     * Safe once the successor round is materialized. */

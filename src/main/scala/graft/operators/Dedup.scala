@@ -572,17 +572,12 @@ object Dedup {
     * Each round is one join + one aggregation shuffle. Use when exact
     * clusters matter (vs the one-hop approximation in [[minhashDedup]]).
     *
-    * Iteration hygiene for real dup graphs (the naive loop is quadratic):
-    *  - every round's labels are `localCheckpoint`ed (eager), which BOTH
-    *    materializes the round and truncates the logical plan — round
-    *    N+1's plan is one join deep, not N joins deep, so ten iterations
-    *    can't stack into a driver StackOverflow or re-execute round 1
-    *    ten times;
-    *  - the convergence probe carries the previous label alongside the
-    *    new one, so `changed` is a scan of the just-materialized round —
-    *    it never re-runs the propagate join;
-    *  - the prior round's checkpoint blocks are freed explicitly once the
-    *    next round is materialized.
+    * Rounds run under [[Checkpoints.rounds]], so round N+1's plan is one
+    * join deep, not N joins deep — ten iterations can't stack into a
+    * driver StackOverflow or re-execute round 1 ten times. Each round
+    * carries the previous label alongside the new one, and the count of
+    * changed labels is observed on the round's own checkpoint job; the
+    * previous label is dropped before the checkpoint.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // edges both directions, reused by every round. Initial labels derive
@@ -592,13 +587,14 @@ object Dedup {
     val edges = pairs.select(col("id_a"), col("id_b"))
       .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges
+    val init = edges
       .groupBy(col("id_a").as("id"))
       .agg(min(least(col("id_b"), col("id_a"))).as("label"))
       .localCheckpoint()
-    var i = 0
-    var converged = false
-    while (i < maxIter && !converged) {
+    val (labels, converged) = Checkpoints.rounds(init, maxIter,
+        ownsInit = true,
+        stop = Some(count_if(col("label") =!= col("prev_label")) === 0)) {
+        (labels, _) =>
       val propagated = edges.join(labels.withColumnRenamed("id", "id_b")
           .withColumnRenamed("label", "nbr_label"), Seq("id_b"))
         .groupBy(col("id_a").as("id")).agg(min(col("nbr_label")).as("prop_label"))
@@ -610,18 +606,10 @@ object Dedup {
       // One extra equi-join per round turns O(diameter) convergence into
       // O(log diameter) — a 1000-link near-dup chain converges in ~10
       // rounds instead of 1000.
-      val chased = hopped.join(labels
+      hopped.join(labels
           .select(col("id").as("label"), col("label").as("label2")), Seq("label"), "left")
         .select(col("id"), col("prev_label"),
           least(col("label"), coalesce(col("label2"), col("label"))).as("label"))
-      // eager localCheckpoint: materializes this round and cuts lineage
-      val next = chased.localCheckpoint()
-      // convergence check scans the materialized round, no recompute
-      val changed = next.filter(col("label") =!= col("prev_label")).limit(1).count()
-      freeCheckpoint(labels)
-      labels = next.select("id", "label")
-      converged = changed == 0
-      i += 1
     }
     edges.unpersist()
     // wrong labels are silent downstream (split clusters); fail loudly
@@ -658,11 +646,6 @@ object Dedup {
       .agg(max_by(col(idCol), struct(col("__score"), -col(idCol))).as(idCol))
     docs.join(winners, Seq(idCol))
   }
-
-  /** See [[Checkpoints.freeCheckpoint]] — the shared release protocol
-    * for round-over-round localCheckpoints. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    Checkpoints.freeCheckpoint(df)
 
   /** TEMPORAL ALIGNMENT + CONTAINMENT — the shared tail of the
     * sequence-media near-dup family ([[Avi.videoNearDupPairs]] over

@@ -35,6 +35,7 @@ import org.apache.spark.sql.functions._
   * "edges never move" contract.
   */
 object Graphs {
+  import Checkpoints.freeCheckpoint
 
   /** Fixed-point integer PageRank. `edges` must carry long columns
     * (`src`, `dst`), pre-deduplicated; for undirected graphs pass both
@@ -169,26 +170,26 @@ object Graphs {
     * per iteration is at most the in-degree sum pre-combine and the node
     * count post-combine — never edge-quadratic.
     *
-    * Each round's label table is eagerly `localCheckpoint`ed and the
-    * superseded round's blocks freed — the [[Dedup.connectedComponents]]
-    * protocol. Because the sentinel rule references the label table
-    * twice per round, a lazy chain would double its LOGICAL plan every
-    * iteration (exponential plan growth kills the driver long before
-    * executor cost matters at corpus scale); checkpointed rounds keep
-    * plan and work linear in `iters`. The hashed edge table is released
-    * before returning — the returned frame reads only the final round's
-    * checkpoint blocks, which free when it is garbage collected. */
+    * Rounds run under [[Checkpoints.rounds]]. Because the sentinel rule
+    * references the label table twice per round, a lazy chain would
+    * double its LOGICAL plan every iteration (exponential plan growth
+    * kills the driver long before executor cost matters at corpus
+    * scale); checkpointed rounds keep plan and work linear in `iters`.
+    * The hashed edge table is released before returning — the returned
+    * frame reads only the final round's checkpoint blocks, which free
+    * when it is garbage collected. */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 10, s"iters out of range: $iters")
     import org.apache.spark.storage.StorageLevel
     val ed = edges.repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var lbl = ed.select(col("src").as("nid"))
+    val init = ed.select(col("src").as("nid"))
       .unionByName(ed.select(col("dst").as("nid")))
       .distinct()
       .select(col("nid"), col("nid").as("lbl"))
       .localCheckpoint()
-    for (_ <- 1 to iters) {
+    val (lbl, _) = Checkpoints.rounds(init, iters, ownsInit = true) {
+        (lbl, _) =>
       val counts = ed.alias("e")
         .join(lbl.alias("p"), col("e.src") === col("p.nid"))
         .groupBy(col("e.dst").as("nid"), col("p.lbl").as("lbl"))
@@ -196,23 +197,15 @@ object Graphs {
       // zero-count self-vote sentinels: a node with no in-neighbors has
       // only its sentinel and keeps its previous label; any real vote
       // outranks the sentinel in the same (−cnt, lbl) argmax
-      val next = counts
+      counts
         .unionByName(lbl.select(col("nid"), col("lbl"), lit(0L).as("cnt")))
         .groupBy(col("nid"))
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("w"))
         .select(col("nid"), col("w.l").as("lbl"))
-        .localCheckpoint() // eager: materializes the round, cuts lineage
-      freeCheckpoint(lbl)
-      lbl = next
     }
     ed.unpersist(blocking = false) // rounds are materialized; nothing lazy reads ed
     lbl
   }
-
-  /** See [[Checkpoints.freeCheckpoint]] — the shared release protocol
-    * for round-over-round localCheckpoints. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    Checkpoints.freeCheckpoint(df)
 
   /** Exact per-node triangle counting by degree orientation — the
     * standard bounded-wedge scheme (each undirected edge is directed
@@ -288,21 +281,19 @@ object Graphs {
     * the core.
     *
     * Rounds are capped at `maxRounds` for replayability; peeling is
-    * MONOTONE (the alive set only shrinks, each round's filter is
+    * MONOTONE (the edge set only shrinks, each round's filter is
     * determined by the previous round's survivors), so an unchanged
-    * alive-node COUNT implies an unchanged set and the loop early-stops
-    * at the fixpoint — converged rounds are no-ops, which is what makes
-    * a fixed-round oracle replay exact whether or not the data needed
+    * edge COUNT implies an unchanged set and the rounds stop at the
+    * fixpoint — converged rounds are no-ops, which is what makes a
+    * fixed-round oracle replay exact whether or not the data needed
     * all the rounds.
     *
     * 100 TB shape: each round is one partial-agg'd degree count plus
     * two src-/dst-keyed semi-filters of the edge table — the alive
     * table carries bare node ids, and the edge table shrinks
-    * monotonically so every round is cheaper than the last. The
-    * per-round count() that powers the early stop is a driver-side
-    * scalar, not a collect. Each round's filtered edge table is eagerly
-    * `localCheckpoint`ed and the superseded round's blocks freed — the
-    * [[Dedup.connectedComponents]] protocol: a round references its
+    * monotonically so every round is cheaper than the last. The edge
+    * count behind the early stop is observed on the round's own
+    * checkpoint job ([[Checkpoints.rounds]]). A round references its
     * predecessor THREE times (degree count + two semi-filters), so a
     * lazy chain would triple its logical plan every round (exponential
     * plan growth kills the driver long before executor cost matters);
@@ -314,35 +305,18 @@ object Graphs {
     require(k >= 1, s"k out of range: $k")
     require(maxRounds >= 1 && maxRounds <= 30,
       s"maxRounds out of range: $maxRounds")
-    import org.apache.spark.storage.StorageLevel
-    var e = edges.select(col("src"), col("dst")).localCheckpoint()
-    var nAlive = -1L
-    var done = false
-    for (_ <- 1 to maxRounds if !done) {
+    val init = edges.select(col("src"), col("dst")).localCheckpoint()
+    val (core, _) = Checkpoints.rounds(init, maxRounds, ownsInit = true,
+        stop = Some(count(lit(1)))) { (e, _) =>
       val alive = e.groupBy(col("src").as("n"))
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val cnt = alive.count()
-      if (cnt == nAlive) {
-        // monotone shrinkage: same count ⇒ same set ⇒ filtering is a
-        // no-op ⇒ fixpoint
-        alive.unpersist(blocking = false)
-        done = true
-      } else {
-        nAlive = cnt
-        val ne = e
-          .join(alive.withColumnRenamed("n", "src"), Seq("src"))
-          .join(alive.withColumnRenamed("n", "dst"), Seq("dst"))
-          .select(col("src"), col("dst"))
-          .localCheckpoint() // eager: materializes the round, cuts lineage
-        alive.unpersist(blocking = false)
-        freeCheckpoint(e)
-        e = ne
-      }
+      e.join(alive.withColumnRenamed("n", "src"), Seq("src"))
+        .join(alive.withColumnRenamed("n", "dst"), Seq("dst"))
+        .select(col("src"), col("dst"))
     }
-    e.groupBy(col("src").as("nid")).agg(count(lit(1)).as("deg"))
+    core.groupBy(col("src").as("nid")).agg(count(lit(1)).as("deg"))
   }
 
   /** Connected components by alternating large-star / small-star
@@ -382,10 +356,10 @@ object Graphs {
     * pairs; labels are node-count-sized and broadcast or
     * co-partitioned).
     *
-    * Iteration hygiene: each round's edge table is eagerly
-    * `localCheckpoint`ed and the superseded round's blocks freed (the
-    * [[Dedup.connectedComponents]] protocol — a round reads its
-    * predecessor four times, so a lazy chain would grow the plan 4^R).
+    * Iteration hygiene: each round's edge table is checkpointed and the
+    * superseded round freed (the [[Checkpoints]] protocol) — a round
+    * reads its predecessor four times, so a lazy chain would grow the
+    * plan 4^R.
     */
   def ccLargeSmallStar(pairs: DataFrame, rounds: Int,
                        skipAssert: Boolean = false): DataFrame = {
@@ -568,15 +542,11 @@ object Graphs {
         // measured worse)
         .localCheckpoint(false)
       val (cnt, fp) = countAndFingerprint(ss)
-      if (r < rounds - 1 && cnt == prevCnt && fp == prevFp) {
+      if (r < rounds - 1 && cnt == prevCnt && fp == prevFp)
         converged = ss.select(col("u"), col("v"), lit(1L).as("f"))
           .unionByName(e.select(col("u"), col("v"), lit(-1L).as("f")))
           .groupBy(col("u"), col("v")).agg(sum(col("f")).as("d"))
           .filter(col("d") =!= 0).isEmpty
-        if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-          System.err.println(s"[cc] round ${r + 1}/$rounds cnt=$cnt probe converged=$converged")
-      } else if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round ${r + 1}/$rounds cnt=$cnt fp=$fp")
       prevCnt = cnt
       prevFp = fp
       if (!first || !keepInput) freeCheckpoint(e)
@@ -656,8 +626,8 @@ object Graphs {
     * one (start, argmin) row per walk BEFORE the exchange (min of a
     * (hash, dst) struct — partial-aggregable), and the growing path
     * string rides the node-count-sized walk table, never the
-    * candidate exchange. Walk tables are localCheckpointed per step
-    * (the [[Dedup.connectedComponents]] protocol).
+    * candidate exchange. Walk tables are one [[Checkpoints.rounds]]
+    * round per step.
     *
     * Returns (start, path) with path = comma-joined node sequence of
     * length steps+1. */
@@ -668,11 +638,12 @@ object Graphs {
     val ed = edges.select(col("src"), col("dst"))
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var walk = ed.select(col("src").as("start")).distinct()
+    val init = ed.select(col("src").as("start")).distinct()
       .select(col("start"), col("start").as("cur"),
         col("start").cast("string").as("path"))
       .localCheckpoint()
-    for (t <- 1 to steps) {
+    val (walk, _) = Checkpoints.rounds(init, steps, ownsInit = true) {
+        (walk, t) =>
       val nxt = walk.select(col("start"), col("cur"))
         .join(ed, col("cur") === col("src"))
         .groupBy(col("start"))
@@ -681,12 +652,9 @@ object Graphs {
             lit(s":$t:"), col("dst"))).as("h"),
           col("dst").as("d"))).as("w"))
         .select(col("start"), col("w.d").as("nxt"))
-      val nw = walk.join(nxt, Seq("start"))
+      walk.join(nxt, Seq("start"))
         .select(col("start"), col("nxt").as("cur"),
           concat(col("path"), lit(","), col("nxt").cast("string")).as("path"))
-        .localCheckpoint()
-      freeCheckpoint(walk)
-      walk = nw
     }
     ed.unpersist(blocking = false)
     walk.select(col("start"), col("path"))
@@ -876,11 +844,11 @@ object Graphs {
     // persist-and-count round protocol kept every round's FULL logical
     // subtree in the plan (persist caches data but never truncates
     // lineage), so by round 4 the analyzed plan was ~2.3 MB and each
-    // action re-paid Catalyst over it. localCheckpoint (the iterative
-    // protocol every other round-based operator here follows) truncates
-    // each round to a LogicalRDD: per-round plans stay constant-sized,
-    // the same one-exchange-per-round execution shape is unchanged, and
-    // the superseded round's blocks free exactly as before.
+    // action re-paid Catalyst over it. Checkpointed rounds
+    // ([[Checkpoints.rounds]]) truncate each round to a LogicalRDD:
+    // per-round plans stay constant-sized, the same
+    // one-exchange-per-round execution shape is unchanged, and the
+    // superseded round's blocks free exactly as before.
     //
     // OPTIMIZATION r14 (guide §2.4 — one materialization per round, not
     // two): the registers now RIDE the state table (v, regs, prev, hc),
@@ -891,15 +859,16 @@ object Graphs {
     // floor, same (est − prev) · w accumulation — so q209 replays
     // bit-identically; per-round state is node-count × (m bytes + 2
     // longs), exactly the two r13 tables folded into one.
-    var state = nodes
+    val init = nodes
       .groupBy(col("v"))
       .agg(Hll.hllBytes(p)(KmvAggregator.kmvHash(col("v"))).as("regs"))
       .withColumn("prev", estMicro)
       .withColumn("hc", lit(0L))
       .localCheckpoint()
-    for (t <- 1 to rounds) {
+    val (state, _) = Checkpoints.rounds(init, rounds, ownsInit = true) {
+        (state, t) =>
       val w = lcm / t
-      val nextState = state.select(col("v"), col("regs"))
+      state.select(col("v"), col("regs"))
         .unionByName(ed
           .join(state.select(col("v").as("dst"), col("regs")), Seq("dst"))
           .select(col("src").as("v"), col("regs")))
@@ -910,9 +879,6 @@ object Graphs {
           col("hc"))
         .select(col("v"), col("regs"), col("est").as("prev"),
           (col("hc") + (col("est") - col("prev")) * w).as("hc"))
-        .localCheckpoint() // eager: materializes before the free below
-      freeCheckpoint(state)
-      state = nextState
     }
     ed.unpersist(blocking = false)
     state.select(col("v"), col("hc"))

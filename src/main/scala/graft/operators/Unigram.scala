@@ -192,17 +192,28 @@ object Unigram {
                           maxPieceLen: Int): DataFrame = {
     // the map-side viterbi is a lazy projection over the words
     // checkpoint — the piece-count join rides the same single pass, and
-    // the one materialization per E-step is this (vocabulary-sized)
-    // counts checkpoint (was: ~6 jobs per E-step through the
-    // prefix-doubling rounds)
+    // the one materialization per E-step is the caller's checkpoint of
+    // these (vocabulary-sized) counts (was: ~6 jobs per E-step through
+    // the prefix-doubling rounds)
     val used = withPieces(viterbi(words, w, maxPieceLen))
       .select(explode(col("pieces")).as("piece"), col("cnt"))
       .groupBy(col("piece")).agg(sum(col("cnt")).as("used"))
     cands.select(col("piece"))
       .join(used, Seq("piece"), "left")
       .select(col("piece"), coalesce(col("used"), lit(0L)).as("cnt"))
-      .localCheckpoint()
   }
+
+  /** `emIters` hard-EM iterations over the fixed census `cands`, each
+    * one E-step under the previous iteration's weights (iteration 0 =
+    * census weights). The census projection that seeds the rounds stays
+    * the caller's: freeing it would free `cands`. Returns the final
+    * counts checkpoint (piece, cnt). */
+  private def emCounts(words: DataFrame, cands: DataFrame, emIters: Int,
+                       maxPieceLen: Int): DataFrame =
+    Checkpoints.rounds(cands.select(col("piece"), col("census").as("cnt")),
+        emIters, ownsInit = false) { (counts, _) =>
+      estepCounts(words, cands, weighted(counts), maxPieceLen)
+    }._1
 
   /** LEARN: fixed candidate census + `emIters` hard-EM iterations.
     * Returns one row per (iter, piece): `cnt` is the piece's count at
@@ -220,7 +231,7 @@ object Unigram {
     val words = wordCensus(docs, textCol, maxWordLen).localCheckpoint()
     val cands = candidateCensus(words, maxPieceLen, topN)
       .localCheckpoint()
-    // iter-0 counts checkpoint too: every estepCounts output is then a
+    // iter-0 counts checkpoint too: every counts table is then a
     // checkpoint, so the corpus-derived census tables free on return —
     // what the returned plan retains is emIters+1 vocabulary-sized
     // counts tables, nothing word-census-sized
@@ -229,7 +240,7 @@ object Unigram {
     val perIter = (0 to emIters).map { k =>
       val w = weighted(counts)
       if (k < emIters)
-        counts = estepCounts(words, cands, w, maxPieceLen)
+        counts = estepCounts(words, cands, w, maxPieceLen).localCheckpoint()
       w.select(lit(k.toLong).as("iter"), col("piece"), col("cnt"),
         col("wt"))
     }
@@ -260,14 +271,7 @@ object Unigram {
     require(maxWordLen >= 2 && maxWordLen <= 32, "maxWordLen out of range")
     val words = wordCensus(docs, textCol, maxWordLen).localCheckpoint()
     val cands = candidateCensus(words, maxPieceLen, topN).localCheckpoint()
-    var counts = cands.select(col("piece"), col("census").as("cnt"))
-    for (i <- 0 until emIters) {
-      val next = estepCounts(words, cands, weighted(counts),
-        maxPieceLen)
-      if (i > 0) Checkpoints.freeCheckpoint(counts) // predecessor E-step
-      counts = next
-    }
-    val pre = counts // estepCounts output — already a checkpoint
+    val pre = emCounts(words, cands, emIters, maxPieceLen)
     val kept = pre
       .withColumn("rn", when(length(col("piece")) === 1, lit(0L))
         .otherwise(row_number().over(Window
@@ -276,8 +280,8 @@ object Unigram {
       .filter((length(col("piece")) === 1 ||
         col("cnt") > 0) && col("rn") <= keepN)
       .select(col("piece"), col("cnt"))
-    val post = estepCounts(words, kept, weighted(kept),
-      maxPieceLen)
+    val post = estepCounts(words, kept, weighted(kept), maxPieceLen)
+      .localCheckpoint()
     Checkpoints.freeCheckpoint(words)
     Checkpoints.freeCheckpoint(cands)
     pre.join(kept.select(col("piece"), lit(1L).as("kept")),
@@ -315,13 +319,7 @@ object Unigram {
       .withColumn("len", length(col("w")).cast("long"))
       .localCheckpoint()
     val cands = candidateCensus(words, maxPieceLen, topN).localCheckpoint()
-    var counts = cands.select(col("piece"), col("census").as("cnt"))
-    for (i <- 0 until emIters) {
-      val next = estepCounts(words, cands, weighted(counts),
-        maxPieceLen)
-      if (i > 0) Checkpoints.freeCheckpoint(counts) // predecessor E-step
-      counts = next
-    }
+    val counts = emCounts(words, cands, emIters, maxPieceLen)
     val best = viterbi(words, weighted(counts), maxPieceLen)
       .localCheckpoint() // materialization barrier: counts/words free below
     Checkpoints.freeCheckpoint(counts) // best is materialized
@@ -349,13 +347,7 @@ object Unigram {
     require(maxWordLen >= 2 && maxWordLen <= 32, "maxWordLen out of range")
     val wds = words.localCheckpoint()
     val cands = candidateCensus(wds, maxPieceLen, topN).localCheckpoint()
-    var counts = cands.select(col("piece"), col("census").as("cnt"))
-    for (i <- 0 until emIters) {
-      val next = estepCounts(wds, cands, weighted(counts),
-        maxPieceLen)
-      if (i > 0) Checkpoints.freeCheckpoint(counts)
-      counts = next
-    }
+    val counts = emCounts(wds, cands, emIters, maxPieceLen)
     val out = weighted(counts).localCheckpoint()
     Checkpoints.freeCheckpoint(counts)
     Checkpoints.freeCheckpoint(wds)
@@ -477,13 +469,7 @@ object Unigram {
     val words = cens.filter(col("cnt_ref") > 0)
       .select(col("w"), col("cnt_ref").as("cnt"), col("len"))
     val cands = candidateCensus(words, maxPieceLen, topN).localCheckpoint()
-    var counts = cands.select(col("piece"), col("census").as("cnt"))
-    for (i <- 0 until emIters) {
-      val next = estepCounts(words, cands, weighted(counts),
-        maxPieceLen)
-      if (i > 0) Checkpoints.freeCheckpoint(counts)
-      counts = next
-    }
+    val counts = emCounts(words, cands, emIters, maxPieceLen)
     // 2. encode the FULL corpus census under the learned weights
     val wdsAll = cens.select(col("w"), col("cnt"), col("len"))
     val best = viterbi(wdsAll, weighted(counts), maxPieceLen)

@@ -385,7 +385,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("global join lint: no cartesian products; nested loops only in intended broadcast patterns") {
-    // empirical allowlist (graft.PlanLint sweep): scalar-subquery join,
+    // empirical allowlist (the sweep below): scalar-subquery join,
     // the brute-force cosine baselines, IVF's broadcast centroids,
     // tfidf's one-row corpus-size broadcast, and the rolling-actives
     // theta joins (a ~30-row day dimension against day-grain distinct

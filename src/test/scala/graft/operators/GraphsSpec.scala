@@ -331,9 +331,10 @@ class GraphsSpec extends SparkSpec {
 
   test("iterative operators leave no per-round cache growth — one documented table each") {
     // a pendant chain forces many peel rounds; each superseded round's
-    // alive set and edge table must be released, so after the action at
-    // most the final core's edge table (kCore) / the hashed edge table
-    // (labelPropagation, pageRank) stays persisted
+    // edge table must be released, so after the action at most the
+    // final round's checkpoint (kCore, labelPropagation, walks,
+    // harmonic centrality, pointer-doubling CC) / the hashed edge table
+    // (pageRank) stays persisted
     // count RELATIVE to a post-cleanup baseline, and do the FULL cleanup
     // (catalog + RDD-level) between sections: catalog.clearCache alone
     // leaves localCheckpoint blocks behind, so an earlier suite's (or
@@ -360,6 +361,18 @@ class GraphsSpec extends SparkSpec {
     Graphs.integerPageRank(chain, 5).collect()
     assert(persisted - base <= 2,
       s"pageRank leaked cached tables: ${persisted - base}")
+    cleanup()
+    Graphs.hashRandomWalks(chain, 6, "leak").collect()
+    assert(persisted - base <= 1,
+      s"hashRandomWalks leaked cached tables: ${persisted - base}")
+    cleanup()
+    Graphs.harmonicCentrality(chain, 4).collect()
+    assert(persisted - base <= 1,
+      s"harmonicCentrality leaked cached tables: ${persisted - base}")
+    cleanup()
+    Dedup.connectedComponents(chain.toDF("id_a", "id_b")).collect()
+    assert(persisted - base <= 1,
+      s"connectedComponents leaked cached tables: ${persisted - base}")
     cleanup()
   }
 
